@@ -5,13 +5,14 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 import graft.functions.GraftFunctionBuilders
 
-/** Engine extension point: registers the custom codegen'd expressions
-  * (graft_dot, graft_minhash_bands) into the session's function
-  * registry. Wire with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")` — the
-  * Verify/Bench/test sessions all do; library call sites fall back to
-  * the equivalent higher-order-function forms when the extension is
-  * absent (Dedup.bands, Similarity.dot), so results never depend on it.
+/** Engine extension point: registers the custom codegen'd `graft_*`
+  * expressions into the session's function registry. REQUIRED — every
+  * kernel call site calls its kernel unconditionally, so a session
+  * without it fails analysis with an UNRESOLVED_ROUTINE error naming
+  * the kernel. [[GraftSession.builder]] wires it
+  * (`spark.sql.extensions=graft.GraftExtensions`). The higher-order
+  * twins (Similarity.dot, Dedup.minhashBandsHof, ...) are equivalence
+  * references for the specs and x_kernel_equiv, not a second path.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -24,14 +24,7 @@ object JobProfile {
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      .config("spark.ui.enabled", "false")
+    val builder = GraftSession.builder(cpus.toInt)
     // A/B experiment knob: semicolon-separated extra confs, e.g.
     //   SPARK_GRAFT_EXTRA_CONF='spark.local.dir=/dev/shm/x;spark.foo=1'
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>

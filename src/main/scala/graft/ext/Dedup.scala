@@ -115,13 +115,12 @@ object Dedup {
     val rows = params.numHashes / params.bands
     // Spread BEFORE the heavy shingle+minhash projections (the policy
     // and its 100 TB rationale live in graft.ext.Spread).
-    // Kernel fast path for the shingle+hash projection too (tokenize →
-    // rolling shingle → xxhash64 → distinct in one primitive pass);
-    // same values as the higher-order chain (GraftFunctionsSpec).
+    // The shingle+hash projection is the graft_shingle_hashes kernel
+    // (tokenize → rolling shingle → xxhash64 → distinct in one
+    // primitive pass); same values as the higher-order chain
+    // shingleHashes(shingles(...)) (GraftFunctionsSpec).
     val hsExpr =
-      if (docs.sparkSession.catalog.functionExists("graft_shingle_hashes"))
-        call_function("graft_shingle_hashes", col(textCol), lit(params.shingleSize))
-      else shingleHashes(shingles(col(textCol), params.shingleSize))
+      call_function("graft_shingle_hashes", col(textCol), lit(params.shingleSize))
     val distributed = Spread.ensure(docs.select(col(idCol).as("id"), col(textCol)))
     // EAGER localCheckpoint, not persist: (a) it is the materialization
     // barrier that stops CollapseProject from inlining the shingle
@@ -141,16 +140,12 @@ object Dedup {
     // safe under ANSI mode (Spark 4's default), where a wrapping
     // multiply would throw ARITHMETIC_OVERFLOW instead.
     //
-    // Fast path: sessions with GraftExtensions evaluate the whole fold
-    // in the codegen'd graft_minhash_bands kernel (higher-order
-    // functions are interpreted — the nested 64-lambda form below is
-    // the same arithmetic, an order of magnitude slower). Both paths
-    // produce identical band hashes (GraftFunctionsSpec).
+    // The whole fold runs in the codegen'd graft_minhash_bands kernel
+    // (GraftExtensions is required); minhashBandsHof is its interpreted
+    // twin, an order of magnitude slower, kept as the equivalence
+    // reference (GraftFunctionsSpec, x_kernel_equiv).
     val bandArray =
-      if (docs.sparkSession.catalog.functionExists("graft_minhash_bands"))
-        call_function("graft_minhash_bands", col("hs"),
-          lit(params.bands), lit(rows))
-      else minhashBandsHof(col("hs"), params.bands, rows)
+      call_function("graft_minhash_bands", col("hs"), lit(params.bands), lit(rows))
     hashDf
       .select(col("id"), posexplode(bandArray))
       .withColumnRenamed("pos", "band_id")
@@ -507,26 +502,16 @@ object Dedup {
         sequence(lit(1), greatest(size(hs) - (w - 1), lit(1))),
         j => array_min(slice(hs, j, lit(w))))))
 
-  /** [[kgramHashes]] + [[winnowSelect]] end to end. Sessions with
-    * GraftExtensions run the codegen'd `graft_winnow` kernel — one
-    * primitive pass per row, no barrier needed (identical
-    * fingerprints: GraftFunctionsSpec pins the equality, x_kernel_equiv
-    * gates it hard-0 through the driver compare). The fallback
-    * higher-order path MATERIALIZES the hash projection between the
-    * two stages (eager — the barrier keeps CollapseProject from
-    * inlining the md5 chain into every window lambda; see [[bands]]
-    * for the policy and the executor-loss caveat). Adds `outCol`
+  /** [[kgramHashes]] + [[winnowSelect]] end to end, as the codegen'd
+    * `graft_winnow` kernel — one primitive pass per row, no barrier
+    * needed (identical fingerprints to the higher-order pair:
+    * GraftFunctionsSpec pins the equality, x_kernel_equiv gates it
+    * hard-0 through the driver compare). Adds `outCol`
     * (array<string> fingerprints) to `df`. */
   def winnowed(df: DataFrame, textCol: String, outCol: String,
                k: Int = 8, w: Int = 4): DataFrame =
-    if (df.sparkSession.catalog.functionExists("graft_winnow"))
-      Spread.ensure(df).withColumn(outCol,
-        call_function("graft_winnow", col(textCol), lit(k), lit(w)))
-    else
-      Spread.ensure(df)
-        .withColumn(outCol, kgramHashes(col(textCol), k))
-        .pipe(Checkpoints.stage)
-        .withColumn(outCol, winnowSelect(col(outCol), w))
+    Spread.ensure(df).withColumn(outCol,
+      call_function("graft_winnow", col(textCol), lit(k), lit(w)))
 
   /** [[winnowed]] with INT-PACKED fingerprints (`outCol` is
     * array<long>, each element the md5-prefix fingerprint's unsigned
@@ -538,18 +523,11 @@ object Dedup {
     * fingerprint set is identical to [[winnowed]]'s modulo encoding —
     * `lpad(lower(hex(fp)), 8, '0')` recovers the string form exactly
     * (GraftFunctionsSpec pins it; hex only at oracle boundaries).
-    * Kernel fast path (`graft_winnow_packed`); the fallback converts
-    * the string pipeline's output AFTER winnow-select, so it pays the
-    * conv() on ~2/(w+1) of the hashes only. */
+    * Runs the `graft_winnow_packed` kernel. */
   def winnowedPacked(df: DataFrame, textCol: String, outCol: String,
                      k: Int = 8, w: Int = 4): DataFrame =
-    if (df.sparkSession.catalog.functionExists("graft_winnow_packed"))
-      Spread.ensure(df).withColumn(outCol,
-        call_function("graft_winnow_packed", col(textCol), lit(k), lit(w)))
-    else
-      winnowed(df, textCol, outCol, k, w)
-        .withColumn(outCol,
-          transform(col(outCol), s => conv(s, 16, 10).cast("long")))
+    Spread.ensure(df).withColumn(outCol,
+      call_function("graft_winnow_packed", col(textCol), lit(k), lit(w)))
 
   /** Shared-passage document pairs via a winnow-fingerprint inverted
     * index: explode each doc's fingerprint set, self-join keyed on the
@@ -830,7 +808,7 @@ object Dedup {
                            textCol: String): DataFrame =
     docs.where(col(textCol).isNotNull)
       .select(col(idCol).as("id"),
-        simhashIn(docs.sparkSession)(col(textCol)).as("sh"))
+        simhashIn(col(textCol)).as("sh"))
       .select(col("id"), col("sh"),
         explode(array((0 until 4).map(j =>
           struct(lit(j).as("band_id"),
@@ -900,14 +878,9 @@ object Dedup {
       })
   }
 
-  /** [[simhash]] with kernel dispatch: the codegen'd `graft_simhash`
+  /** Production [[simhash]]: the codegen'd `graft_simhash` kernel
     * (ONE token pass — the HOF form re-evaluates the split+hash array
-    * once per mask bit, 64× per row) when the session has graft
-    * extensions, the bit-identical HOF when it doesn't (vote sums are
-    * exact integers, so the two can never diverge — pinned in
-    * DedupSpec). */
-  def simhashIn(spark: org.apache.spark.sql.SparkSession)(text: Column): Column =
-    if (spark.catalog.functionExists("graft_simhash"))
-      call_function("graft_simhash", text)
-    else simhash(text)
+    * once per mask bit, 64× per row). Vote sums are exact integers, so
+    * kernel and HOF twin can never diverge (pinned in DedupSpec). */
+  def simhashIn(text: Column): Column = call_function("graft_simhash", text)
 }

@@ -87,12 +87,8 @@ object Multimodal {
     * No builtin fallback exists (a JPEG marker scan is a loop, not a
     * fixed-offset substr), so like graft_nfc this requires the
     * extension. */
-  def imageDims(payload: Column): Column = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    require(spark.catalog.functionExists("graft_image_dims"),
-      "graft_image_dims needs spark.sql.extensions=graft.GraftExtensions")
+  def imageDims(payload: Column): Column =
     call_function("graft_image_dims", payload)
-  }
 
   /** The mapPartitions twin of [[imageDims]] — the mapInPandas shape a
     * real codec fleet runs (per-batch setup amortized), calling the
@@ -140,12 +136,8 @@ object Multimodal {
     * the audio sibling of [[imageDims]] (Kernels.wavMeta: RIFF chunk
     * scan to "fmt ", pure JVM, null-not-throw). Returns
     * struct<format,channels,sample_rate,bits_per_sample>. */
-  def wavMeta(payload: Column): Column = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    require(spark.catalog.functionExists("graft_wav_meta"),
-      "graft_wav_meta needs spark.sql.extensions=graft.GraftExtensions")
+  def wavMeta(payload: Column): Column =
     call_function("graft_wav_meta", payload)
-  }
 
   /** The mapPartitions twin of [[wavMeta]] — same parser, batched
     * plumbing; x_wav_meta gates per-row parity. Output: (idCol,

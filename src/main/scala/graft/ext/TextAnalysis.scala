@@ -685,12 +685,8 @@ object TextAnalysis {
     * zero allocation. DuckDB's nfc_normalize replays it exactly, so
     * oracles stay value-exact. Kernel required (no higher-order
     * twin — Unicode composition tables are not Column-expressible). */
-  def nfcNormalize(df: DataFrame, textCol: String, outCol: String): DataFrame = {
-    require(df.sparkSession.catalog.functionExists("graft_nfc"),
-      "graft_nfc kernel not registered — set " +
-        "spark.sql.extensions=graft.GraftExtensions")
+  def nfcNormalize(df: DataFrame, textCol: String, outCol: String): DataFrame =
     df.withColumn(outCol, call_function("graft_nfc", col(textCol)))
-  }
 
   /** SentencePiece-style UNIGRAM-LM tokenizer trainer (Kudo 2018,
     * arXiv:1804.10959) — the [[bpeTrain]] sibling: instead of greedy
@@ -813,24 +809,14 @@ object TextAnalysis {
     * shuffle-free. Kernel REQUIRED (the DP is unboundedly iterative;
     * no higher-order twin exists). */
   def unigramEncode(df: DataFrame, textCol: String, pieces: Seq[String],
-                    outCol: String): DataFrame = {
-    require(df.sparkSession.catalog.functionExists("graft_unigram_encode"),
-      "graft_unigram_encode kernel not registered — set " +
-        "spark.sql.extensions=graft.GraftExtensions")
+                    outCol: String): DataFrame =
     df.withColumn(outCol,
-      call_function("graft_unigram_encode", col(textCol),
-        lit(pieces.toArray)))
-  }
+      call_function("graft_unigram_encode", col(textCol), lit(pieces.toArray)))
 
   def bpeEncode(df: DataFrame, textCol: String, merges: Seq[String],
-                outCol: String): DataFrame = {
-    require(df.sparkSession.catalog.functionExists("graft_bpe_encode"),
-      "graft_bpe_encode kernel not registered — set " +
-        "spark.sql.extensions=graft.GraftExtensions (unlike the " +
-        "dot/minhash kernels this one has no higher-order fallback)")
+                outCol: String): DataFrame =
     df.withColumn(outCol,
       call_function("graft_bpe_encode", col(textCol), lit(merges.toArray)))
-  }
 
   /** DSIR-style importance weights via n-gram LM contrast (Data
     * Selection with Importance Resampling, Xie et al. 2023,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{Tables, TestSpark}
-import graft.ext.{Dedup, Similarity}
+import graft.ext.{BloomPrune, Dedup, Similarity}
 
 /** The codegen'd kernel expressions must be drop-in replacements:
   * bit-identical to the higher-order-function forms they accelerate,
@@ -15,8 +15,41 @@ class GraftFunctionsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("GraftExtensions registers both functions in the session") {
-    assert(spark.catalog.functionExists("graft_dot"))
-    assert(spark.catalog.functionExists("graft_minhash_bands"))
+    // getFunction throws AnalysisException for an unregistered name.
+    Seq("graft_dot", "graft_minhash_bands").foreach(f =>
+      assert(spark.catalog.getFunction(f).name == f))
+  }
+
+  test("a session without a kernel fails loudly: Dedup.bands and BloomPrune.prune name the missing kernel") {
+    import org.apache.spark.sql.AnalysisException
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+    val registry = spark.sessionState.functionRegistry
+    // Drop the kernel from the session registry, expect the call site
+    // to fail naming it, and restore it whatever happens.
+    def without(name: String, info: ExpressionInfo,
+                builder: Seq[Expression] => Expression)(body: => Unit): Unit = {
+      val fid = FunctionIdentifier(name)
+      assert(registry.dropFunction(fid), s"$name must be registered")
+      try {
+        val e = intercept[AnalysisException](body)
+        assert(e.getMessage.contains(name), s"error must name $name: ${e.getMessage}")
+      } finally registry.registerFunction(fid, info, builder)
+    }
+    val docs = Tables.documents(spark, TestSpark.sf0001).limit(20)
+    without("graft_minhash_bands", GraftFunctionBuilders.minhashInfo,
+        GraftFunctionBuilders.minhashBuilder _) {
+      Dedup.bands(docs, "doc_id", "text", Dedup.MinHashParams())
+    }
+    val orders = Tables.orders(spark, TestSpark.sf0001)
+    val bf = BloomPrune.keyFilter(orders.limit(10), "o_orderkey", 100)
+    without("graft_might_contain", GraftFunctionBuilders.mightContainInfo,
+        GraftFunctionBuilders.mightContainBuilder _) {
+      BloomPrune.prune(orders, "o_orderkey", bf)
+    }
+    // Restored: both kernels resolve again.
+    assert(Dedup.bands(docs, "doc_id", "text", Dedup.MinHashParams()).count() > 0)
+    assert(BloomPrune.prune(orders, "o_orderkey", bf).count() > 0)
   }
 
   test("graft_dot is bit-identical to the zip_with/aggregate fold on real embeddings") {
@@ -59,7 +92,7 @@ class GraftFunctionsSpec extends AnyFunSuite {
     val rows = params.numHashes / params.bands
     val hs = Dedup.shingleHashes(Dedup.shingles(col("text"), params.shingleSize))
     val P = 2147483647L
-    // The HOF form as written in Dedup.bands' fallback branch.
+    // The HOF form as written in Dedup.minhashBandsHof.
     val slow = transform(sequence(lit(0), lit(params.bands - 1)), j =>
       aggregate(sequence(j * rows, j * rows + (rows - 1)), lit(1125899907L),
         (acc, i) => pmod(acc * 31 +

@@ -15,6 +15,17 @@
 # SKIP_SMOKE=1 when testdata is known-good and iterating fast.
 set -euo pipefail
 cd "$(dirname "$0")/.."
+# One production path per kernel, one session factory: no code under
+# src/ may probe the function registry for a kernel (the kernels are
+# required, see graft.GraftExtensions) or build a session outside
+# graft.GraftSession. bench/ keeps its own session and is not checked.
+stray=$(grep -rnE 'functionExists\(|SparkSession\.builder' src \
+  | grep -v '^src/main/scala/graft/GraftSession\.scala:' || true)
+if [[ -n "$stray" ]]; then
+  echo "precommit: kernel probe or session builder outside GraftSession.scala:" >&2
+  echo "$stray" >&2
+  exit 1
+fi
 if [[ "${1:-}" == "test" ]]; then
   sbt -batch test
 else
