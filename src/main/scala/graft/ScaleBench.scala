@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.collection.immutable.ListMap
+
 import graft.ext.{Dedup, Similarity}
 
 /** Scale-evidence harness: runs the dedup / similarity pipelines on
@@ -28,9 +30,12 @@ import graft.ext.{Dedup, Similarity}
   *     ±0.01 perturbation (cosine ≈ 0.9997, above the 0.9 threshold);
   *     labels are 64 uniform blocks.
   *
-  * Usage: runMain graft.ScaleBench [outBase] [scales]
+  * Usage: runMain graft.ScaleBench [outBase] [scales] [mode]
   *   outBase  defaults to /tmp/graft_scale
   *   scales   comma list of multipliers, default "1,10,50"
+  *   mode     one `*-only` name from [[modes]] runs that point alone;
+  *            `points-only` runs just the fixed-size points; an
+  *            unknown mode is refused with the full list
   * Prints one JSON line per scale point (and a gen line per corpus).
   */
 object ScaleBench {
@@ -349,31 +354,6 @@ object ScaleBench {
     // listener attached — it would double-count every later point.
   }
 
-  /** [[withShuffleBytes]]'s INPUT twin: wall seconds + bytes READ
-    * (taskMetrics.inputMetrics) of every task during `f` — the scan
-    * cost a storage-bound probe pays. Same bounded quiesce. */
-  private def withInputBytes[T](spark: SparkSession)(f: => T): (T, Double, Long) = {
-    val acc = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        Option(e.taskMetrics).foreach(m => acc.addAndGet(m.inputMetrics.bytesRead))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val (r, t) = timed(f)
-      var last = -1L
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < 150) {
-        Thread.sleep(200)
-        waited += 1
-        val cur = acc.get()
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-      }
-      (r, t, acc.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   /** WinnowIndex probe vs one-shot winnowPairs — the amortization
     * argument for the incremental shared-passage API, measured (the
     * winnowing twin of [[incrementalDedupPoint]]). An n-doc
@@ -544,22 +524,7 @@ object ScaleBench {
     genDocuments(spark, n).write.mode("overwrite").parquet(pathStr)
     val docs = spark.read.parquet(pathStr)
     // Stage one parquet file per shard — the file-per-trigger source.
-    val inDir = {
-      import java.nio.file.{Files, Paths}
-      val base = Files.createTempDirectory(s"graft_scale_stream_x$scale").toString
-      val in = s"$base/in"
-      Files.createDirectories(Paths.get(in))
-      (0 until shards).foreach { i =>
-        val w = s"$base/w$i"
-        docs.where(pmod(col("doc_id"), lit(shards)) === i)
-          .coalesce(1).write.mode("overwrite").parquet(w)
-        val part = new java.io.File(w).listFiles()
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .getOrElse(throw new IllegalStateException(s"no part file under $w"))
-        Files.move(part.toPath, Paths.get(in, f"shard_$i%03d.parquet"))
-      }
-      in
-    }
+    val inDir = StreamOps.stageFileShards(docs, "doc_id", shards)
     val params = Dedup.MinHashParams()
     val table = s"graft_scale_stream_idx_x$scale"
     val batchWalls = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
@@ -622,25 +587,22 @@ object ScaleBench {
       s""""slope_last_over_first":${fmt(lastTen / math.max(firstTen, 1e-9))}}}}"""
   }
 
-  /** Compressed parquet column-chunk bytes of `cols` across the given
-    * cluster partitions of a saved IVF index — EXACTLY the bytes a
-    * column-pruned, partition-pruned probe scan must fetch (the
+  /** Compressed parquet column-chunk bytes of `cols` over the parquet
+    * files directly under `dirs` (a missing dir counts 0) — EXACTLY
+    * the bytes a column-pruned scan of those files must fetch (the
     * range-GETs an object store serves). Read from file footers:
     * deterministic, unlike task input metrics, which on a local
     * filesystem track only metadata reads (measured: two scans of
     * DIFFERENT columns reported byte-identical "input"). */
-  private def probedChunkBytes(spark: SparkSession, table: String,
-                               clusters: Seq[Int], cols: Set[String]): Long = {
+  private def chunkBytes(spark: SparkSession, dirs: Seq[String],
+                         cols: Set[String]): Long = {
     import scala.jdk.CollectionConverters._
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
     val conf = spark.sessionState.newHadoopConf()
-    val fs = loc.getFileSystem(conf)
-    clusters.flatMap { c =>
-      val d = new org.apache.hadoop.fs.Path(loc, s"cluster_id=$c")
-      if (!fs.exists(d)) Nil
-      else fs.listStatus(d).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
+    dirs.flatMap { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      val fs = p.getFileSystem(conf)
+      if (!fs.exists(p)) Nil
+      else fs.listStatus(p).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
     }.map { st =>
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(st.getPath, conf))
@@ -651,12 +613,21 @@ object ScaleBench {
     }.sum
   }
 
+  /** The partition dirs of `clusters` in a saved IVF index — what a
+    * partition-pruned probe scan reads ([[chunkBytes]]' input). */
+  private def clusterDirs(spark: SparkSession, table: String,
+                          clusters: Seq[Int]): Seq[String] = {
+    val loc = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(table)).location
+    clusters.map(c => s"${new org.apache.hadoop.fs.Path(loc)}/cluster_id=$c")
+  }
+
   /** The int8 IVF probe vs the float probe — the scan-bytes cut
     * measured on a CLUSTERED corpus ([[genClusteredEmbeddings]], so
     * probed partitions carry ~nProbe/k of the data and the float
     * column has realistic (incompressible) entropy. Byte numbers are
     * compressed column-chunk sizes over the probed partitions
-    * ([[probedChunkBytes]]):
+    * ([[chunkBytes]] over [[clusterDirs]]):
     *   - float_scan: (id, embedding) chunks — what probeTopK's
     *     ranking scan fetches;
     *   - int8_scan: (id, qv) chunks — what the quantized pre-rank
@@ -682,8 +653,9 @@ object ScaleBench {
       IvfIndex.build(corpus, "vec_id", "embedding", table, k = 16, iters = 2)
     }
     val probed = Similarity.probeClusters(IvfIndex.centroids(spark, table), q, 4)
-    val bytesFloat = probedChunkBytes(spark, table, probed, Set("vec_id", "embedding"))
-    val bytesInt8 = probedChunkBytes(spark, table, probed, Set("vec_id", "qv"))
+    val probedDirs = clusterDirs(spark, table, probed)
+    val bytesFloat = chunkBytes(spark, probedDirs, Set("vec_id", "embedding"))
+    val bytesInt8 = chunkBytes(spark, probedDirs, Set("vec_id", "qv"))
     spark.sqlContext.clearCache()
     val (fRows, tF) = timed {
       IvfIndex.probeTopK(spark, table, "vec_id", "embedding", q, 10, nProbe = 4)
@@ -1143,26 +1115,6 @@ object ScaleBench {
       s""""fim":{"t":${fmt(tFim)},"n_rewritten":$nFim}}"""
   }
 
-  /** Column-chunk bytes for `cols` over every parquet file under a
-    * raw directory — [[probedChunkBytes]] for non-catalog paths. */
-  private def dirChunkBytes(spark: SparkSession, pathStr: String,
-                            cols: Set[String]): Long = {
-    import scala.jdk.CollectionConverters._
-    val p = new org.apache.hadoop.fs.Path(pathStr)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = p.getFileSystem(conf)
-    fs.listStatus(p).toSeq
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map { st =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(st.getPath, conf))
-        try r.getFooter.getBlocks.asScala.map(_.getColumns.asScala
-            .filter(cc => cols.contains(cc.getPath.toDotString.split("\\.")(0)))
-            .map(_.getTotalSize).sum).sum
-        finally r.close()
-      }.sum
-  }
-
   /** Product quantization at scale — the BYTES story next to the int8
     * point: the corpus written twice, once as float vectors and once
     * as the packed 8-byte PQ codes, compressed column-chunk sizes
@@ -1196,9 +1148,9 @@ object ScaleBench {
       Pq.encodePacked(corpus, "vec_id", "embedding", books)
         .write.mode("overwrite").parquet(s"$basePath/codes")
     }
-    val bytesFloat = dirChunkBytes(spark, s"$basePath/float",
+    val bytesFloat = chunkBytes(spark, Seq(s"$basePath/float"),
       Set("vec_id", "embedding"))
-    val bytesCodes = dirChunkBytes(spark, s"$basePath/codes",
+    val bytesCodes = chunkBytes(spark, Seq(s"$basePath/codes"),
       Set("vec_id", "pq_code"))
     val enc = spark.read.parquet(s"$basePath/codes")
     spark.sqlContext.clearCache()
@@ -1237,7 +1189,7 @@ object ScaleBench {
     * int8 IVF probe's (same cell fraction, 8-byte code vs d-byte qv)
     * and far below the flat-PQ scan (which reads every code). Bytes
     * are compressed column-chunk sizes over each index's own probed
-    * partitions ([[probedChunkBytes]] — both indexes train their own
+    * partitions ([[chunkBytes]] — both indexes train their own
     * Lloyd cells, so each probe prunes with its own centroids).
     *
     * THE REGIME BOUNDARY this gate encodes (measured, not assumed):
@@ -1320,9 +1272,11 @@ object ScaleBench {
       Similarity.probeClusters(IvfIndex.centroids(spark, tableQ), q, nProbe)
     val probedPq =
       Similarity.probeClusters(IvfIndex.centroids(spark, tablePq), q, nProbe)
-    val bytesInt8 = probedChunkBytes(spark, tableQ, probedQ, Set("vec_id", "qv"))
-    val bytesCode = probedChunkBytes(spark, tablePq, probedPq, Set("vec_id", "pq_code"))
-    val bytesFloat = probedChunkBytes(spark, tablePq, probedPq, Set("vec_id", "embedding"))
+    val dirsQ = clusterDirs(spark, tableQ, probedQ)
+    val dirsPq = clusterDirs(spark, tablePq, probedPq)
+    val bytesInt8 = chunkBytes(spark, dirsQ, Set("vec_id", "qv"))
+    val bytesCode = chunkBytes(spark, dirsPq, Set("vec_id", "pq_code"))
+    val bytesFloat = chunkBytes(spark, dirsPq, Set("vec_id", "embedding"))
     spark.sqlContext.clearCache()
     val (qRows, tQ) = timed {
       IvfIndex.probeTopKQuantized(spark, tableQ, "vec_id", "embedding", q, 10,
@@ -1706,19 +1660,7 @@ object ScaleBench {
       queries, k = 10, nProbe = nProbe)
     val (oneShot, tOneShot) = timed { oneShotDf.collect() }
     // Stage 4 one-file shards (16 queries each, vec_id % 4).
-    val inDir = s"$pathStr/in"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
-    (0 until 4).foreach { i =>
-      val w = s"$pathStr/w$i"
-      queriesDf.where(pmod(col("vec_id"), lit(4)) === i)
-        .coalesce(1).write.mode("overwrite").parquet(w)
-      val part = new java.io.File(w).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(s"no part file under $w"))
-      java.nio.file.Files.move(part.toPath,
-        java.nio.file.Paths.get(inDir, s"shard_$i.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
+    val inDir = StreamOps.stageFileShards(queriesDf, "vec_id", 4)
     val stream = spark.readStream.schema(queriesDf.schema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
     val sink = s"graft_scale_serve_sink_x$scale"
@@ -2100,7 +2042,6 @@ object ScaleBench {
     * = one row per distinct text, token mass = 24·survivors. */
   def curationStreamPoint(spark: SparkSession, dir: String,
                           scale: Int): String = {
-    import java.nio.file.{Files, Paths}
     val n = 20000L * scale
     val sink = s"graft_scale_curation_x$scale"
     Seq(sink, graft.ext.Curation.fingerprintIndexOf(sink))
@@ -2127,19 +2068,7 @@ object ScaleBench {
             concat(lit("w"), lpad(base.cast("string"), 6, "0"), lit("x"),
               j.cast("string"))), " ")).as("text"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val ioBase = Files.createTempDirectory("graft_scale_curation_").toString
-    val inDir = s"$ioBase/in"
-    Files.createDirectories(Paths.get(inDir))
-    (0 until 5).foreach { k =>
-      val w = s"$ioBase/w$k"
-      docs.where(pmod(col("doc_id"), lit(5)) === k)
-        .coalesce(1).write.mode("overwrite").parquet(w)
-      val part = new java.io.File(w).listFiles()
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(s"no part under $w"))
-      Files.move(part.toPath, Paths.get(inDir, s"shard_$k.parquet"))
-    }
+    val inDir = graft.streaming.StreamOps.stageFileShards(docs, "doc_id", 5)
     spark.sqlContext.clearCache()
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
@@ -2635,22 +2564,7 @@ object ScaleBench {
       .select(col("doc_id"), concat(col("text"), lit(" "), col("etext")).as("text"))
     val train = rawTrain.where(pmod(col("doc_id"), lit(100L)) =!= 0)
       .unionByName(planted).localCheckpoint(true)
-    val inDir = {
-      import java.nio.file.{Files, Paths}
-      val base = Files.createTempDirectory(s"graft_scale_decon_x$scale").toString
-      val in = s"$base/in"
-      Files.createDirectories(Paths.get(in))
-      (0 until 8).foreach { i =>
-        val w = s"$base/w$i"
-        train.where(pmod(col("doc_id"), lit(8L)) === i)
-          .coalesce(1).write.mode("overwrite").parquet(w)
-        val part = new java.io.File(w).listFiles()
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .getOrElse(throw new IllegalStateException(s"no part file under $w"))
-        Files.move(part.toPath, Paths.get(in, f"shard_$i%03d.parquet"))
-      }
-      in
-    }
+    val inDir = graft.streaming.StreamOps.stageFileShards(train, "doc_id", 8)
     val idx = s"graft_scale_decon_eval_x$scale"
     WinnowIndex.build(evalDocs, "doc_id", "text", idx, k = 20, w = 8)
     spark.sqlContext.clearCache()
@@ -3087,273 +3001,109 @@ object ScaleBench {
       s""""hub_degree":$hubSpokes,"n_edges":$nSkewEdges}}"""
   }
 
+  private type Point = (SparkSession, String, Int) => String
+  /** A `*-only` mode: runs its point alone on (session, outBase,
+    * scales), printing one JSON line per measured point. */
+  private type Mode = (SparkSession, String, Seq[Int]) => Unit
+
+  /** The common shape: an untimed 1× warm-up (janino codegen + JIT land
+    * there, so the 1× line measures the plan, not JVM cold start — the
+    * policy Bench follows), then one line per scale. */
+  private def warmed(point: Point): Mode = (spark, dir, scales) => {
+    point(spark, dir, 1)
+    unwarmed(point)(spark, dir, scales)
+  }
+
+  private def unwarmed(point: Point): Mode = (spark, dir, scales) =>
+    scales.foreach(m => println(point(spark, dir, m)))
+
+  /** Every `*-only` mode → its point and run shape. */
+  private[graft] val modes: ListMap[String, Mode] = ListMap(
+    "serve-only" -> warmed(servePoint), // streaming serve loop vs one-shot probe
+    "bucket-scaling-only" -> warmed(bucketScalingPoint), // layouts GROW, walls sub-linear
+    "rebalance-only" -> warmed(rebalancePoint), // rebalance under planted drift
+    "advisor-only" -> warmed(advisorPoint), // tier advisor on regime corpora
+    "opoint-only" -> warmed(opointPoint), // recall-vs-nProbe operating point
+    "ops-only" -> warmed(opsPoint), // audit/freshness/janitor vs index state
+    "curation-stream-only" -> warmed(curationStreamPoint),
+    "vecdrift-only" -> warmed(vecDriftPoint), // cell-mass drift census
+    "multidrift-only" -> warmed(multiDriftPoint), // one-pass census vs singles
+    "relational-only" -> warmed(relationalPoint), // TPC-H Q3-shape shuffle
+    "neardup-skew-only" -> warmed(neardupSkewPoint),
+    "inc-dedup-only" -> warmed(incrementalDedupPoint),
+    "winnow-skew-only" -> warmed(winnowSkewPoint),
+    "ivf-quantized-only" -> warmed(ivfQuantizedPoint),
+    "winnow-inc-only" -> warmed(winnowIncPoint),
+    "corpus-ops-only" -> warmed(corpusOpsPoint),
+    "curation-ops-only" -> warmed(curationOpsPoint),
+    "retrieval-ops-only" -> warmed(retrievalOpsPoint),
+    "dedup-ender-only" -> warmed(dedupEnderPoint),
+    "simhash-only" -> warmed(simhashPoint),
+    "simhash-saturation-only" -> unwarmed(simhashSaturationPoint),
+    "padding-only" -> warmed(paddingPoint),
+    "pq-only" -> warmed(pqPoint),
+    "ivfpq-only" -> warmed(ivfPqPoint),
+    "purge-only" -> warmed(purgePoint),
+    "skew-join-only" -> warmed(skewJoinPoint),
+    "ivfpq-batch-only" -> warmed(ivfPqBatchPoint),
+    "ivf-batch-only" -> warmed(ivfBatchPoint),
+    "dsir-inc-only" -> warmed(dsirIncPoint),
+    "lm-inc-only" -> warmed(lmIncPoint),
+    "classifier-ops-only" -> warmed(classifierOpsPoint),
+    "ivf-curve-only" -> ((spark, _, _) => println(ivfRecallCurvePoint(spark))), // fixed size
+    "event-time-only" -> warmed(eventTimePoint),
+    "compaction-only" -> warmed(compactionPoint),
+    "stream-ingest-only" -> ((spark, dir, _) => { // fixed 10×: batch COUNT is the axis
+      streamIngestPoint(spark, dir, 1, shards = 10) // warm-up, untimed
+      println(streamIngestPoint(spark, dir, 10))
+    }))
+
+  private[graft] case class Args(outBase: String, scales: Seq[Int],
+                                 mode: Option[String], pointsOnly: Boolean)
+
+  /** `[outBase] [scales] [mode | points-only]`. Refuses, before any
+    * session starts, what would otherwise run something other than
+    * what was asked: an unknown mode (an `*-only` token not in
+    * [[modes]], or any token past scales), more than one mode, or a
+    * mode where outBase belongs. A token with a '/' is a path. */
+  private[graft] def parseArgs(args: Array[String]): Either[String, Args] = {
+    val (flags, positional) =
+      args.toSeq.partition(a => a.endsWith("-only") && !a.contains('/'))
+    val chosen = flags.filter(modes.contains).distinct
+    val unknown = flags.filterNot(f => f == "points-only" || modes.contains(f)) ++
+      positional.drop(2)
+    val scales = positional.lift(1).getOrElse("1,10,50").split(",").map(_.trim)
+    def fail(why: String) = Left(s"ScaleBench: $why; valid modes: " +
+      modes.keys.mkString(" ") + " (or points-only)")
+    if (unknown.nonEmpty) fail(s"unknown mode ${unknown.mkString(", ")}")
+    else if (chosen.size > 1) fail(s"one mode at a time, got ${chosen.mkString(", ")}")
+    else if (args.headOption.exists(modes.contains))
+      fail(s"mode ${args.head} given where outBase belongs")
+    else if (!scales.forall(_.toIntOption.isDefined))
+      fail(s"scales must be a comma list of integers, got ${positional(1)}")
+    else Right(Args(positional.headOption.getOrElse("/tmp/graft_scale"),
+      scales.map(_.toInt).toSeq, chosen.headOption, flags.contains("points-only")))
+  }
+
   def main(args: Array[String]): Unit = {
-    val positional = args.filterNot(_ == "points-only")
-    val outBase = positional.headOption.getOrElse("/tmp/graft_scale")
-    val scales = positional.drop(1).headOption.getOrElse("1,10,50")
-      .split(",").map(_.trim.toInt).toSeq
+    val Args(outBase, scales, mode, pointsOnly) = parseArgs(args) match {
+      case Right(a) => a
+      case Left(err) => System.err.println(err); sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    mode match {
+      case Some(m) => modes(m)(spark, outBase, scales)
+      case None => defaultRun(spark, outBase, scales, pointsOnly)
+    }
+    spark.stop()
+  }
 
-    // `serve-only`: the streaming serving loop vs one-shot batch probe.
-    if (args.contains("serve-only")) {
-      servePoint(spark, outBase, 1)
-      scales.foreach(m => println(servePoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `bucket-scaling-only`: the size-derived layout paths observed
-    // GROWING (buckets / sink buckets / state partitions > 1) with
-    // sub-linear walls — the evidence leg sf0.1 cannot provide.
-    if (args.contains("bucket-scaling-only")) {
-      bucketScalingPoint(spark, outBase, 1)
-      scales.foreach(m => println(bucketScalingPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `rebalance-only`: rebalance under planted distribution drift.
-    if (args.contains("rebalance-only")) {
-      rebalancePoint(spark, outBase, 1)
-      scales.foreach(m => println(rebalancePoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `advisor-only`: the tier advisor on regime-constructed corpora.
-    if (args.contains("advisor-only")) {
-      advisorPoint(spark, outBase, 1)
-      scales.foreach(m => println(advisorPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `opoint-only`: the recall-vs-nProbe operating-point curve.
-    if (args.contains("opoint-only")) {
-      opointPoint(spark, outBase, 1)
-      scales.foreach(m => println(opointPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `ops-only`: audit/freshness/janitor walls vs growing index state.
-    if (args.contains("ops-only")) {
-      opsPoint(spark, outBase, 1)
-      scales.foreach(m => println(opsPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `curation-stream-only`: the streaming curation pipeline's wall
-    // vs corpus scale, counts exact at every m.
-    if (args.contains("curation-stream-only")) {
-      curationStreamPoint(spark, outBase, 1)
-      scales.foreach(m => println(curationStreamPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `vecdrift-only`: the cell-mass drift census vs a reference.
-    if (args.contains("vecdrift-only")) {
-      vecDriftPoint(spark, outBase, 1)
-      scales.foreach(m => println(vecDriftPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `multidrift-only`: the one-pass multi-metric census vs singles.
-    if (args.contains("multidrift-only")) {
-      multiDriftPoint(spark, outBase, 1)
-      scales.foreach(m => println(multiDriftPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `relational-only`: the TPC-H Q3-shape shuffle point (broadcast
-    // vs SMJ legs, cross-plan determinism gate), 1× warmup untimed.
-    if (args.contains("relational-only")) {
-      relationalPoint(spark, outBase, 1)
-      scales.foreach(m => println(relationalPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `neardup-skew-only` (any arg position): just the boilerplate-skew
-    // dedup point at each scale, 1× warmup untimed first.
-    if (args.contains("neardup-skew-only")) {
-      neardupSkewPoint(spark, outBase, 1)
-      scales.foreach(m => println(neardupSkewPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `inc-dedup-only`: just the incremental-probe-vs-full-recompute
-    // point at each scale, 1× warmup untimed first.
-    if (args.contains("inc-dedup-only")) {
-      incrementalDedupPoint(spark, outBase, 1)
-      scales.foreach(m => println(incrementalDedupPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `winnow-skew-only`: just the winnowing posting-cap point.
-    if (args.contains("winnow-skew-only")) {
-      winnowSkewPoint(spark, outBase, 1)
-      scales.foreach(m => println(winnowSkewPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `ivf-quantized-only`: just the int8-probe scan-bytes point.
-    if (args.contains("ivf-quantized-only")) {
-      ivfQuantizedPoint(spark, outBase, 1)
-      scales.foreach(m => println(ivfQuantizedPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `winnow-inc-only`: just the incremental-winnow probe point.
-    if (args.contains("winnow-inc-only")) {
-      winnowIncPoint(spark, outBase, 1)
-      scales.foreach(m => println(winnowIncPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `corpus-ops-only`: the round-12 corpus operators at scale.
-    if (args.contains("corpus-ops-only")) {
-      corpusOpsPoint(spark, outBase, 1)
-      scales.foreach(m => println(corpusOpsPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `curation-ops-only`: the round-13 curation quartet at scale.
-    if (args.contains("curation-ops-only")) {
-      curationOpsPoint(spark, outBase, 1)
-      scales.foreach(m => println(curationOpsPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `retrieval-ops-only`: the round-13 retrieval/tokenizer/split
-    // additions at scale (BM25 index, BPE, cluster split).
-    if (args.contains("retrieval-ops-only")) {
-      retrievalOpsPoint(spark, outBase, 1)
-      scales.foreach(m => println(retrievalOpsPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `dedup-ender-only`: the survivor anti-join at 50% duplicate mass.
-    if (args.contains("dedup-ender-only")) {
-      dedupEnderPoint(spark, outBase, 1)
-      scales.foreach(m => println(dedupEnderPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `simhash-only`: banded-SimHash detector point.
-    if (args.contains("simhash-only")) {
-      simhashPoint(spark, outBase, 1)
-      scales.foreach(m => println(simhashPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `simhash-saturation-only`: 16-bit vs 8-bit band saturation on
-    // near-uniform hashes.
-    if (args.contains("simhash-saturation-only")) {
-      scales.foreach(m => println(simhashSaturationPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `padding-only`: batch-assembly padding census at scale.
-    if (args.contains("padding-only")) {
-      paddingPoint(spark, outBase, 1)
-      scales.foreach(m => println(paddingPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `pq-only`: product-quantization bytes/probe point.
-    if (args.contains("pq-only")) {
-      pqPoint(spark, outBase, 1)
-      scales.foreach(m => println(pqPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `ivfpq-only`: IVFADC bytes/probe vs the int8 IVF probe.
-    if (args.contains("ivfpq-only")) {
-      ivfPqPoint(spark, outBase, 1)
-      scales.foreach(m => println(ivfPqPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `purge-only`: purge bytes-written ∝ touched partitions.
-    if (args.contains("purge-only")) {
-      purgePoint(spark, outBase, 1)
-      scales.foreach(m => println(purgePoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `skew-join-only`: AQE skew-join vs salted join head to head.
-    if (args.contains("skew-join-only")) {
-      skewJoinPoint(spark, outBase, 1)
-      scales.foreach(m => println(skewJoinPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `ivfpq-batch-only`: batched vs per-query IVFADC serving.
-    if (args.contains("ivfpq-batch-only")) {
-      ivfPqBatchPoint(spark, outBase, 1)
-      scales.foreach(m => println(ivfPqBatchPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `ivf-batch-only`: batched vs per-query float/int8 IVF serving.
-    if (args.contains("ivf-batch-only")) {
-      ivfBatchPoint(spark, outBase, 1)
-      scales.foreach(m => println(ivfBatchPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `dsir-inc-only`: two-index incremental DSIR vs full recompute.
-    if (args.contains("dsir-inc-only")) {
-      dsirIncPoint(spark, outBase, 1)
-      scales.foreach(m => println(dsirIncPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `lm-inc-only`: incremental LM scoring vs full recompute.
-    if (args.contains("lm-inc-only")) {
-      lmIncPoint(spark, outBase, 1)
-      scales.foreach(m => println(lmIncPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `classifier-ops-only`: the round-13 second-half additions
-    // (NB classifier, Gopher rules, streaming decontamination,
-    // tokenize→pack) at scale.
-    if (args.contains("classifier-ops-only")) {
-      classifierOpsPoint(spark, outBase, 1)
-      scales.foreach(m => println(classifierOpsPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `ivf-curve-only`: the recall-vs-nProbe operating curve (fixed
-    // size — the probe width is the axis, not the corpus).
-    if (args.contains("ivf-curve-only")) {
-      println(ivfRecallCurvePoint(spark))
-      spark.stop()
-      return
-    }
-    // `event-time-only`: sessionization / windows / SCD-2 at scale.
-    if (args.contains("event-time-only")) {
-      eventTimePoint(spark, outBase, 1)
-      scales.foreach(m => println(eventTimePoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `compaction-only`: just the index-compaction recovery point.
-    if (args.contains("compaction-only")) {
-      compactionPoint(spark, outBase, 1)
-      scales.foreach(m => println(compactionPoint(spark, outBase, m)))
-      spark.stop()
-      return
-    }
-    // `stream-ingest-only`: just the 50-micro-batch ingest point
-    // (fixed 10× scale — the batch COUNT is the axis, not the corpus).
-    if (args.contains("stream-ingest-only")) {
-      streamIngestPoint(spark, outBase, 1, shards = 10) // warmup, untimed
-      println(streamIngestPoint(spark, outBase, 10))
-      spark.stop()
-      return
-    }
-    // `points-only` (any arg position) skips the corpus scales and
-    // runs just the fixed-size points — quick re-measurement.
-    val pointsOnly = args.contains("points-only")
+  /** The default run: corpus generation and every per-scale point, then
+    * the fixed-size points; `points-only` runs just the latter. */
+  private def defaultRun(spark: SparkSession, outBase: String,
+                         scales: Seq[Int], pointsOnly: Boolean): Unit = {
     if (!pointsOnly) {
       scales.foreach { m =>
         val dir = s"$outBase/x$m"
@@ -3370,12 +3120,9 @@ object ScaleBench {
       // (same policy as Bench).
       runPoint(spark, s"$outBase/x${scales.min}", scales.min)
       scales.foreach { m => println(runPoint(spark, s"$outBase/x$m", m)) }
-      scales.foreach { m => println(neardupSkewPoint(spark, outBase, m)) }
-      scales.foreach { m => println(incrementalDedupPoint(spark, outBase, m)) }
-      scales.foreach { m => println(winnowSkewPoint(spark, outBase, m)) }
-      scales.foreach { m => println(ivfQuantizedPoint(spark, outBase, m)) }
-      scales.foreach { m => println(winnowIncPoint(spark, outBase, m)) }
-      scales.foreach { m => println(compactionPoint(spark, outBase, m)) }
+      Seq[Point](neardupSkewPoint, incrementalDedupPoint, winnowSkewPoint,
+        ivfQuantizedPoint, winnowIncPoint, compactionPoint)
+        .foreach(unwarmed(_)(spark, outBase, scales))
     }
     // Fixed-size points (not per-scale): heavy hitters at 10M items,
     // ~7M distinct — the regime where the census's shuffle is the
@@ -3389,6 +3136,5 @@ object ScaleBench {
     println(heavyHittersPoint(spark, 10000000L))
     println(prefixSumPoint(spark, 20000000L))
     println(streamIngestPoint(spark, outBase, 10))
-    spark.stop()
   }
 }

@@ -2230,28 +2230,8 @@ private[graft] object CorpusQueries {
                                      docs: DataFrame,
                                      idCol: String = "doc_id"): String =
     shardMemo.synchronized {
-      import java.nio.file.{Files, Paths}
-      val perSession = {
-        val m = shardMemo.get(s)
-        if (m != null) m
-        else { val m2 = new java.util.HashMap[String, String](); shardMemo.put(s, m2); m2 }
-      }
-      if (!perSession.containsKey(dir)) {
-        val base = Files.createTempDirectory("graft_stream_shards_").toString
-        val inDir = s"$base/in"
-        Files.createDirectories(Paths.get(inDir))
-        (0 until 3).foreach { i =>
-          val w = s"$base/w$i"
-          docs.where(pmod(col(idCol), lit(3)) === i)
-            .coalesce(1).write.mode("overwrite").parquet(w)
-          val part = new java.io.File(w).listFiles()
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(throw new IllegalStateException(s"no part file under $w"))
-          Files.move(part.toPath, Paths.get(inDir, s"shard_$i.parquet"))
-        }
-        perSession.put(dir, inDir)
-      }
-      perSession.get(dir)
+      shardMemo.computeIfAbsent(s, _ => new java.util.HashMap[String, String]())
+        .computeIfAbsent(dir, _ => graft.streaming.StreamOps.stageFileShards(docs, idCol, 3))
     }
 
   /** x_stream_winnow: streaming shared-passage ingest

@@ -23,6 +23,29 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamOps {
 
+  /** Stage `df` as `shards` one-file parquet shards for a file-stream
+    * source (`maxFilesPerTrigger = 1` makes each shard one
+    * micro-batch): rows with `pmod(keyCol, shards) == i` land in
+    * `shard_%03d.parquet`, written in shard order. Returns the input
+    * dir, inside a fresh temp dir. */
+  private[graft] def stageFileShards(df: DataFrame, keyCol: String,
+                                     shards: Int): String = {
+    import java.nio.file.{Files, Paths}
+    val base = Files.createTempDirectory("graft_stream_shards_").toString
+    val in = s"$base/in"
+    Files.createDirectories(Paths.get(in))
+    (0 until shards).foreach { i =>
+      val w = s"$base/w$i"
+      df.where(pmod(col(keyCol), lit(shards)) === i)
+        .coalesce(1).write.mode("overwrite").parquet(w)
+      val part = new java.io.File(w).listFiles()
+        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+        .getOrElse(throw new IllegalStateException(s"no part file under $w"))
+      Files.move(part.toPath, Paths.get(in, f"shard_$i%03d.parquet"))
+    }
+    in
+  }
+
   /** SCALE-ADAPTIVE state-partition count for STATEFUL streaming
     * queries (r21, optimization guide §2.2/§2.5 "derive partitioning
     * from input size, not a constant tuned for local or cluster"):

@@ -54,4 +54,41 @@ class ScaleBenchSpec extends AnyFunSuite {
     assert(x.zip(y).forall { case (u, v) => u == v },
       "generator must be deterministic")
   }
+
+  test("mode table keeps every *-only point; parseArgs refuses a typo, two modes, a mode as outBase") {
+    // Written out, not derived from the table: a mode dropped or renamed
+    // in the table must fail here.
+    val dispatched = Seq(
+      "serve-only", "bucket-scaling-only", "rebalance-only", "advisor-only",
+      "opoint-only", "ops-only", "curation-stream-only", "vecdrift-only",
+      "multidrift-only", "relational-only", "neardup-skew-only",
+      "inc-dedup-only", "winnow-skew-only", "ivf-quantized-only",
+      "winnow-inc-only", "corpus-ops-only", "curation-ops-only",
+      "retrieval-ops-only", "dedup-ender-only", "simhash-only",
+      "simhash-saturation-only", "padding-only", "pq-only", "ivfpq-only",
+      "purge-only", "skew-join-only", "ivfpq-batch-only", "ivf-batch-only",
+      "dsir-inc-only", "lm-inc-only", "classifier-ops-only", "ivf-curve-only",
+      "event-time-only", "compaction-only", "stream-ingest-only")
+    assert(dispatched.size == 35)
+    assert(ScaleBench.modes.keys.toSeq == dispatched)
+    import ScaleBench.{Args, parseArgs}
+    assert(parseArgs(Array("/tmp/x", "1,10", "serve-only")) ==
+      Right(Args("/tmp/x", Seq(1, 10), Some("serve-only"), pointsOnly = false)))
+    assert(parseArgs(Array("/tmp/pq-only", "1", "pq-only")) ==
+      Right(Args("/tmp/pq-only", Seq(1), Some("pq-only"), pointsOnly = false)))
+    assert(parseArgs(Array("points-only")) ==
+      Right(Args("/tmp/graft_scale", Seq(1, 10, 50), None, pointsOnly = true)))
+    val bad = Seq(
+      Array("/tmp/x", "1", "serve-onyl"),              // unknown mode
+      Array("/tmp/x", "1", "bogus-only"),
+      Array("/tmp/x", "1", "serve-only", "pq-only"),   // two modes
+      Array("serve-only", "1"))                        // mode as outBase
+    bad.foreach { args =>
+      parseArgs(args) match {
+        case Right(a) => fail(s"accepted ${args.mkString(" ")} as $a")
+        case Left(err) => assert(dispatched.forall(err.contains),
+          s"the error must list every valid mode: $err")
+      }
+    }
+  }
 }

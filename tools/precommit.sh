@@ -26,6 +26,16 @@ if [[ -n "$stray" ]]; then
   echo "$stray" >&2
   exit 1
 fi
+# One shard stager: writing a DataFrame as one-file shards for a
+# file-stream source lives in StreamOps.stageFileShards only. bench/
+# and src/test are not checked.
+stray=$(grep -rn 'startsWith("part-")' src/main \
+  | grep -v '^src/main/scala/graft/streaming/StreamOps\.scala:' || true)
+if [[ -n "$stray" ]]; then
+  echo "precommit: part-file staging outside StreamOps.scala (use StreamOps.stageFileShards):" >&2
+  echo "$stray" >&2
+  exit 1
+fi
 if [[ "${1:-}" == "test" ]]; then
   sbt -batch test
 else
